@@ -221,7 +221,7 @@ def main() -> None:
     print(json.dumps({
         "metric": "triples/sec end-to-end (extract→link→canonicalize→materialize)",
         "value": round(n_triples / elapsed, 1),
-        "unit": "sec",
+        "unit": "triples/sec",
         "queries": q_secs,
         "sf": sf,
         "pages": n_input,

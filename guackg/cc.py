@@ -13,11 +13,17 @@ is the lexicographic min of the component (deterministic — no
 sequence numbers, the scale-out replacement for guac's atomic uint32
 id, backend.go:73-75).
 
-Scale notes: every iteration is one groupBy + one join (both on the
-node key). Lineage is cut with localCheckpoint every iteration (on a
-real cluster: checkpoint to the job's scratch Iceberg/HDFS dir) so
-the plan doesn't grow exponentially. Convergence is O(log n)
-iterations; a star of 10^6 aliases converges in 2.
+Scale notes: every iteration is two groupBys + two joins on the node
+key (one of each per star step). Lineage is cut with localCheckpoint
+every iteration (on a real cluster: checkpoint to the job's scratch
+Iceberg/HDFS dir) so the plan doesn't grow exponentially. Convergence
+is O(log n) iterations; a star of 10^6 aliases around its minimum
+converges in 1.
+
+The loop stops after the first iteration whose oriented edges (u > v)
+form a star forest: every u has one edge and no v is also a u. Star
+steps preserve components and edges point down, so each star is a whole
+component rooted at its minimum: an exact test, no confirming round.
 """
 
 from __future__ import annotations
@@ -41,27 +47,20 @@ DRIVER_CC_MAX_BYTES = 128 * 1024 * 1024
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u: connect strictly-larger neighbors to
-    m = min(N(u) ∪ {u})."""
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).filter(F.col("u") != F.col("v"))
-    mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-    mins = mins.select("u", F.least("mv", F.col("u")).alias("m"))
+    m = min(N(u) ∪ {u}). Output (v, m) has v > u ≥ m: already oriented,
+    possibly duplicated (small star deduplicates)."""
+    sym = edges.union(edges.select("v", "u"))  # by position: (v, u)
+    mins = sym.groupBy("u").agg(F.least(F.min("v"), "u").alias("m"))
     return (sym.join(mins, on="u")
             .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct())
+            .select(F.col("v").alias("u"), F.col("m").alias("v")))
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Edges arrive oriented (u > v). For each u: connect all
     neighbors ≤ u (and u itself) to m = min neighbor."""
-    oriented = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).filter(F.col("u") != F.col("v")).distinct()
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-    nbr_edges = (oriented.join(mins, on="u")
+    mins = edges.groupBy("u").agg(F.min("v").alias("m"))
+    nbr_edges = (edges.join(mins, on="u")
                  .select(F.col("v").alias("u"), F.col("m").alias("v")))
     self_edges = mins.select("u", F.col("m").alias("v"))
     return (nbr_edges.union(self_edges)
@@ -69,18 +68,24 @@ def _small_star(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _checksum(edges: DataFrame) -> tuple[int, int, int]:
-    """(edge count, content hash, total key bytes) in ONE 1-row agg —
-    the bytes feed the driver-path decision, so sizing costs no extra
-    job."""
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when no node that is a u has a second edge, in or out."""
+    ends = edges.select("u", F.lit(1).alias("out")).union(
+        edges.select("v", F.lit(0)))
+    deg = ends.groupBy("u").agg(F.max("out").alias("out"),
+                                F.count("*").alias("deg"))
+    return deg.filter((F.col("out") == 1) & (F.col("deg") > 1)).count() == 0
+
+
+def _checksum(edges: DataFrame) -> tuple[int, int]:
+    """(edge count, total key bytes) in ONE 1-row agg — the sizes the
+    driver-path decision needs."""
     row = edges.select(
         F.count("*").alias("n"),
-        F.coalesce(F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                   F.lit(0).cast("decimal(38,0)")).alias("h"),
         F.coalesce(F.sum(F.length("u") + F.length("v")), F.lit(0))
         .alias("b"),
     ).collect()[0]
-    return int(row["n"]), int(row["h"]), int(row["b"])
+    return int(row["n"]), int(row["b"])
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
@@ -129,34 +134,28 @@ def connected_components(
              .distinct()
              .localCheckpoint())
 
-    prev = _checksum(edges)
-    if prev[0] <= driver_max_edges and prev[2] <= DRIVER_CC_MAX_BYTES:
+    n_edges, n_bytes = _checksum(edges)
+    if n_edges <= driver_max_edges and n_bytes <= DRIVER_CC_MAX_BYTES:
         return _driver_union_find(edges)
     for _ in range(MAX_ITERATIONS):
         edges = _small_star(_large_star(edges)).localCheckpoint()
-        cur = _checksum(edges)
-        if cur == prev:
+        if _is_star_forest(edges):
             break
-        prev = cur
     else:
-        # never fall through silently: before the fixpoint a member
-        # can still carry edges to several roots, and the
-        # dropDuplicates below would pick one ARBITRARILY — two
-        # members of one true component mapped to different canons,
-        # corrupting every downstream table with no error
+        # never fall through silently: a member can still carry edges
+        # to several roots, splitting its component in every table
         raise RuntimeError(
             f"connected_components did not converge after "
-            f"{MAX_ITERATIONS} star iterations ({prev[0]} edges); "
+            f"{MAX_ITERATIONS} star iterations ({n_edges} edges); "
             "raise MAX_ITERATIONS — star contraction needs "
             "O(log n) rounds, so this indicates pathological input")
 
-    # At the fixpoint every edge is (member, root).
-    stars = edges  # u > v = root
-    roots = stars.select(F.col("v").alias("member_key"),
+    # A star forest: every edge is (member, root), one per member.
+    roots = edges.select(F.col("v").alias("member_key"),
                          F.col("v").alias("canon_key")).distinct()
-    members = stars.select(F.col("u").alias("member_key"),
+    members = edges.select(F.col("u").alias("member_key"),
                            F.col("v").alias("canon_key"))
-    return members.union(roots).dropDuplicates(["member_key"])
+    return members.union(roots)
 
 
 def canonicalize_keys(df: DataFrame, key_col: str,

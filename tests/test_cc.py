@@ -4,8 +4,8 @@ agreement with the union-find golden fixture, and exact agreement
 between the distributed star path and the driver fast path."""
 
 import pytest
-from pyspark.sql import functions as F
 
+from guackg import cc
 from guackg.cc import canonicalize_keys, connected_components
 
 # 0 forces the distributed large-star/small-star path even on tiny
@@ -14,11 +14,13 @@ BOTH_PATHS = pytest.mark.parametrize("driver_max", [0, 1_000_000],
                                      ids=["stars", "driver-uf"])
 
 
+CHAIN = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("e", "f"),
+         ("f", "g"), ("g", "h")]
+
+
 @BOTH_PATHS
 def test_chain_converges(spark, driver_max):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("e", "f"),
-         ("f", "g"), ("g", "h")], "key_a string, key_b string")
+    edges = spark.createDataFrame(CHAIN, "key_a string, key_b string")
     comp = connected_components(edges, driver_max_edges=driver_max)
     got = {r.member_key: r.canon_key for r in comp.collect()}
     assert got == {k: "a" for k in "abcdefgh"}
@@ -34,6 +36,39 @@ def test_two_components_and_star(spark, driver_max):
     assert got["x3"] == "x1" and got["x2"] == "x1"
     assert got["leaf099"] == "hub"
     assert len({v for k, v in got.items() if k.startswith("leaf")}) == 1
+
+
+def test_star_path_stops_at_star_forest(spark, monkeypatch):
+    """The star path stops in the round that produces the star forest,
+    without a confirming round: 1 round for a star around its minimum,
+    3 for the 8-node chain (a round that reproduces the previous edge
+    set would make these 2 and 4)."""
+    rounds, small_star = [], cc._small_star
+
+    def counting(edges):  # small star closes every round
+        rounds.append(1)
+        return small_star(edges)
+
+    monkeypatch.setattr(cc, "_small_star", counting)
+    star = spark.createDataFrame([("hub", f"leaf{i:03d}") for i in range(100)],
+                                 "key_a string, key_b string")
+    comp = connected_components(star, driver_max_edges=0).collect()
+    assert len(rounds) == 1
+    assert len(comp) == 101 and {r.canon_key for r in comp} == {"hub"}
+
+    rounds.clear()
+    chain = spark.createDataFrame(CHAIN, "key_a string, key_b string")
+    connected_components(chain, driver_max_edges=0).collect()
+    assert len(rounds) == 3
+
+
+def test_star_path_raises_when_not_converged(spark, monkeypatch):
+    """Running out of iterations before the star forest raises; it
+    never returns a partial mapping."""
+    monkeypatch.setattr(cc, "MAX_ITERATIONS", 1)
+    chain = spark.createDataFrame(CHAIN, "key_a string, key_b string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, driver_max_edges=0)
 
 
 def test_matches_golden_components(spark, corpus):

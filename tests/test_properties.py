@@ -122,9 +122,9 @@ def test_connected_components_match_union_find(spark, pairs):
     # large-star/small-star iteration (forced via driver_max_edges=0)
     got = {r["member_key"]: r["canon_key"]
            for r in connected_components(df).collect()}
-    got_dist = {r["member_key"]: r["canon_key"]
-                for r in connected_components(
-                    df, driver_max_edges=0).collect()}
+    dist_rows = connected_components(df, driver_max_edges=0).collect()
+    got_dist = {r["member_key"]: r["canon_key"] for r in dist_rows}
+    assert len(dist_rows) == len(got_dist)  # one row per member_key
 
     parent: dict = {}
 
