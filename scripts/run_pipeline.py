@@ -67,7 +67,8 @@ def main() -> None:
     out = pipe.run(pages, alias, assertions, stages=stages,
                    input_fingerprint=input_fp)
 
-    summary = {"stages": list(stages), "elapsed_sec": round(time.time() - t0, 2)}
+    summary = {"stages": list(stages), "elapsed_sec": round(time.time() - t0, 2),
+               "stage_secs": pipe.stage_secs}
     # row counts BEFORE compaction: the returned DataFrames hold file
     # indexes over the pre-compaction layout, and compact_table
     # replaces those files — counting after would read a stale index

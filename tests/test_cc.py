@@ -1,7 +1,10 @@
-"""Stage 4 tests: large-star/small-star connected components —
-chains (multi-hop convergence), the 100-alias star (skew), exact
-agreement with the union-find golden fixture, and exact agreement
-between the distributed star path and the driver fast path."""
+"""Stage 4 tests: connected components — chains (multi-hop
+convergence), the leaf-peeling corner cases (a 100-alias star peels
+completely, isolated pairs, a leaf that is its component's minimum,
+an edge given both ways, a leafless cycle that skips the peel), the
+star-forest stop condition on a leafless cycle, exact agreement with
+the union-find golden fixture, and exact agreement between the
+distributed path and the driver fast path."""
 
 import pytest
 
@@ -28,21 +31,34 @@ def test_chain_converges(spark, driver_max):
 
 @BOTH_PATHS
 def test_two_components_and_star(spark, driver_max):
-    rows = [("x1", "x2"), ("x2", "x3")]
+    rows = [("x1", "x2"), ("x2", "x3"), ("x2", "x1")]  # x1-x2 both ways
+    # a hub whose neighbours are all leaves never enters the core
     rows += [("hub", f"leaf{i:03d}") for i in range(100)]
+    rows += [("p2", "p1")]  # an isolated pair: both ends are leaves
+    # a core triangle whose minimum is the leaf b0
+    rows += [("c1", "c2"), ("c2", "c3"), ("c3", "c1"), ("c2", "b0")]
     edges = spark.createDataFrame(rows, "key_a string, key_b string")
-    comp = connected_components(edges, driver_max_edges=driver_max)
-    got = {r.member_key: r.canon_key for r in comp.collect()}
-    assert got["x3"] == "x1" and got["x2"] == "x1"
+    comp = connected_components(edges, driver_max_edges=driver_max).collect()
+    got = {r.member_key: r.canon_key for r in comp}
+    assert len(comp) == len(got) == 3 + 101 + 2 + 4
+    assert got["x3"] == "x1" and got["x2"] == "x1" and got["x1"] == "x1"
     assert got["leaf099"] == "hub"
     assert len({v for k, v in got.items() if k.startswith("leaf")}) == 1
+    assert got["p1"] == got["p2"] == "p1"
+    assert {got[k] for k in ("b0", "c1", "c2", "c3")} == {"b0"}
+
+    cycle = spark.createDataFrame([("c1", "c2"), ("c2", "c3"), ("c3", "c1")],
+                                  "key_a string, key_b string")
+    comp = connected_components(cycle, driver_max_edges=driver_max)
+    assert {r.member_key: r.canon_key for r in comp.collect()} == {
+        "c1": "c1", "c2": "c1", "c3": "c1"}
 
 
 def test_star_path_stops_at_star_forest(spark, monkeypatch):
-    """The star path stops in the round that produces the star forest,
-    without a confirming round: 1 round for a star around its minimum,
-    3 for the 8-node chain (a round that reproduces the previous edge
-    set would make these 2 and 4)."""
+    """A 100-leaf star peels completely and takes no star round. The
+    leafless 8-node cycle skips the peel and stops in the round that
+    produces the star forest, without a confirming round (a round that
+    reproduces the previous edge set would make it 4)."""
     rounds, small_star = [], cc._small_star
 
     def counting(edges):  # small star closes every round
@@ -53,13 +69,14 @@ def test_star_path_stops_at_star_forest(spark, monkeypatch):
     star = spark.createDataFrame([("hub", f"leaf{i:03d}") for i in range(100)],
                                  "key_a string, key_b string")
     comp = connected_components(star, driver_max_edges=0).collect()
-    assert len(rounds) == 1
+    assert len(rounds) == 0
     assert len(comp) == 101 and {r.canon_key for r in comp} == {"hub"}
 
-    rounds.clear()
-    chain = spark.createDataFrame(CHAIN, "key_a string, key_b string")
-    connected_components(chain, driver_max_edges=0).collect()
+    cycle = spark.createDataFrame(CHAIN + [("h", "a")],
+                                  "key_a string, key_b string")
+    comp = connected_components(cycle, driver_max_edges=0).collect()
     assert len(rounds) == 3
+    assert len(comp) == 8 and {r.canon_key for r in comp} == {"a"}
 
 
 def test_star_path_raises_when_not_converged(spark, monkeypatch):
