@@ -23,14 +23,15 @@ Pipeline of the delta pass (`apply_promotions`):
    is functional).
 4. exact graph patch: evidence rows touching a remapped key are
    re-resolved through the standard resolver (same code path as the
-   full pipeline — resolve_triples → build_edges/page_mention_edges),
-   so n_evidence / first_seen / last_seen / match_level are EXACT,
-   not sum-approximated; stale rows (including the promoted
-   `ent:guac/…` fallback identities — round-3 advice #3) are RETRACTED
-   via merge_upsert's delete_keys, nodes committed before edges.
-5. lineage is recorded under the enriched dictionary's fingerprint,
-   so a subsequent `KGPipeline.run` with the same corpus + enriched
-   dictionary resumes every stage.
+   full pipeline — resolve_triples → build_edges/page_edges), so
+   n_evidence / first_seen / last_seen / match_level are EXACT, not
+   sum-approximated; stale rows (including the promoted `ent:guac/…`
+   fallback identities — round-3 advice #3) are RETRACTED via
+   merge_upsert's delete_keys, nodes committed before edges.
+5. every dictionary-dependent lineage record (pipeline._DICT_STAGES)
+   is re-stamped with pipeline.stage_fingerprints under the enriched
+   dictionary, so a subsequent `KGPipeline.run` with the same corpus +
+   enriched dictionary resumes every stage.
 
 Crash safety: the delta (changed links + key remap) is JOURNALED to
 `_enrich_pending/` BEFORE the first table mutation — the Iceberg
@@ -61,14 +62,13 @@ from pyspark.sql import functions as F
 from guackg import io as gio
 from guackg.cc import canonicalize_keys, connected_components
 from guackg.lineage import Lineage
-from guackg.link import (advisory_edges, equivalence_edges_from_links,
+from guackg.link import (equivalence_edges_from_links,
                          identifier_candidates, relink_fallbacks)
-from guackg.triples import SAME_AS_PRED
-from guackg.materialize import (build_edges, build_nodes,
-                                page_map_fits_broadcast,
-                                page_mention_edges, resolve_triples)
-from guackg.pipeline import PIPELINE_VERSION, _content_fp, _fingerprint
-from guackg.triples import EXTRACTOR_VERSION
+from guackg.materialize import (EDGE_SINK, NODE_SINK, build_edges,
+                                build_nodes, page_key_map,
+                                resolve_triples)
+from guackg.pipeline import (_DICT_STAGES, canonicalize_edges, page_edges,
+                             side_input_fps, stage_fingerprints)
 
 
 def _mark(df: DataFrame, keys: DataFrame, col: str, marker: str) -> DataFrame:
@@ -80,26 +80,6 @@ def _mark(df: DataFrame, keys: DataFrame, col: str, marker: str) -> DataFrame:
     return df.join(F.broadcast(side), on=col, how="left")
 
 
-def _cc_edges(spark, out, links, assertions, equiv=None):
-    """The canonicalizer's FULL edge set, mirrored from the pipeline's
-    canonicalize stage (pipeline.py _cc): linker equivalence edges,
-    PARSER-ASSERTED advisory equality (same_as triples from the
-    workdir's parsed table, resolved through the given links), and
-    caller-supplied assertions. The enrichment patch must rebuild
-    components over this same set — recomputing from linker edges
-    alone would silently split every advisory-merged component."""
-    if equiv is None:
-        equiv = equivalence_edges_from_links(links)
-    cc_in = equiv.select("key_a", "key_b")
-    adv = (gio.read_table(spark, out("triples"))
-           .filter(F.col("pred") == SAME_AS_PRED))
-    cc_in = cc_in.unionByName(
-        advisory_edges(adv, links).select("key_a", "key_b"))
-    if assertions is not None:
-        cc_in = cc_in.unionByName(assertions.select("key_a", "key_b"))
-    return cc_in
-
-
 def apply_promotions(
     spark: SparkSession,
     workdir: str,
@@ -107,48 +87,33 @@ def apply_promotions(
     alias_enriched: DataFrame,
     assertions: DataFrame | None = None,
     input_fingerprint: str = "",
-    include_page_graph: bool | None = None,
 ) -> dict:
     """Apply a promotion batch (surface, canonical_key, kind) to a
     built workdir. `alias_enriched` is the FULL enriched dictionary
     (old ∪ promoted) — its content fingerprint stamps the lineage.
     Returns a stats dict (promotions, changed links, remapped keys,
-    affected evidence rows, edge upserts/deletes).
-
-    `include_page_graph=None` (default) infers the flag from the
-    workdir itself — page edges live under the `pred=mentions`
-    partition of the edges table — so a promotion pass can never
-    inject partial page edges into a page-graph-free build (or skip
-    patching them in a build that has them); pass an explicit bool
-    only to assert a build mode, not to choose one."""
+    affected evidence rows, edge upserts/deletes)."""
     lineage = Lineage(workdir)
     out = lambda name: os.path.join(workdir, name)  # noqa: E731
-    if include_page_graph is None:
-        include_page_graph = os.path.isdir(
-            os.path.join(out("edges"), "pred=mentions"))
     t0 = time.time()
     # promotions typically derive from THIS workdir's candidate table
     # (the collectsub queue), which this pass overwrites — pin the
     # rows now so no consumer chases deleted files later
     promoted = promoted.localCheckpoint()
 
-    fp_base = _fingerprint(PIPELINE_VERSION, EXTRACTOR_VERSION,
-                           input_fingerprint)
+    fps = stage_fingerprints(input_fingerprint,
+                             *side_input_fps(alias_enriched, assertions))
     # single-corpus contract: the evidence table must belong to the
     # corpus we are patching (see module docstring)
     trip_rec = lineage.read("triples")
-    if not trip_rec or trip_rec["fingerprint"] != \
-            _fingerprint(fp_base, "triples"):
+    if not trip_rec or trip_rec["fingerprint"] != fps["triples"]:
         raise ValueError(
             "workdir evidence does not match input_fingerprint="
             f"{input_fingerprint!r}; the delta re-link patches the "
             "corpus it was built from — run a full re-ingest instead")
-    dict_fp = _content_fp(alias_enriched, ["surface", "canonical_key"])
-    asrt_fp = "none" if assertions is None else \
-        _content_fp(assertions, ["key_a", "key_b"])
-
-    merge_fp = _fingerprint(fp_base, "graph_merge", dict_fp, asrt_fp,
-                            include_page_graph)
+    # its same_as rows are canonicalize input (never rewritten here)
+    parsed = gio.read_table(spark, out("triples"))
+    merge_fp = fps["graph_merge"]
     journal = os.path.join(workdir, "_enrich_pending")
     stats = {"promotions": promoted.count()}
     if os.path.exists(os.path.join(journal, "meta.json")):
@@ -190,8 +155,7 @@ def apply_promotions(
             # outputs) and return
             stats["changed_links"] = 0
             stats["remapped_keys"] = 0
-            _record_lineage(spark, lineage, out, fp_base, dict_fp,
-                            asrt_fp, include_page_graph)
+            _record_lineage(spark, lineage, out, fps)
             stats["elapsed_sec"] = round(time.time() - t0, 2)
             return stats
 
@@ -201,8 +165,9 @@ def apply_promotions(
         links_new_logical = (links_old.join(changed.select("norm"),
                                             on="norm", how="left_anti")
                              .unionByName(changed))
-        cc_in = _cc_edges(spark, out, links_new_logical, assertions)
-        comps_new = connected_components(cc_in).localCheckpoint()
+        comps_new = connected_components(canonicalize_edges(
+            equivalence_edges_from_links(links_new_logical), parsed,
+            links_new_logical, assertions)).localCheckpoint()
 
         # ---- 3. key remap (old final key → new final key)
         # (a) the changed norms: their old identity was the fallback
@@ -271,8 +236,8 @@ def apply_promotions(
     # recomputed from the POST-merge links table — identical to the
     # pre-journal logical computation (CC is deterministic in its edge
     # set), and the only correct source on a journal resume
-    cc_in = _cc_edges(spark, out, links_new, assertions, equiv=equiv)
-    comps_new = connected_components(cc_in)
+    comps_new = connected_components(
+        canonicalize_edges(equiv, parsed, links_new, assertions))
     gio.write_table(comps_new, out("canonicalize"))
     comps_new = gio.read_table(spark, out("canonicalize"))
 
@@ -289,26 +254,17 @@ def apply_promotions(
     stats["affected_evidence_rows"] = re_res.count()
 
     n_buckets = gio.edge_bucket_count(out("edges"))
-    new_edges = build_edges(re_res, n_buckets=n_buckets)
-    if include_page_graph:
-        ext = gio.read_table(spark, out("extract"))
-        page_keys = ext.select(
-            "url", "warc_ts",
-            F.concat(F.lit("page:"), F.col("page_sha256"))
-            .alias("page_key"))
-        ext_rows = (lineage.read("extract") or {}).get("total_rows", 0)
-        bcast = page_map_fits_broadcast(ext_rows)
-        pedges = page_mention_edges(re_res, page_keys,
-                                    broadcast_page_map=bcast,
-                                    n_buckets=n_buckets)
-        # the mention explode creates PARTIAL groups for stable
-        # entities co-mentioned on affected rows — only groups whose
-        # entity identity is in the remap image actually changed, and
-        # those are complete (every row carrying such a key is
-        # affected by construction)
-        pedges = _mark(pedges, new_keys, "obj_key", "_mk") \
-            .filter(F.col("_mk").isNotNull()).drop("_mk")
-        new_edges = new_edges.unionByName(pedges)
+    pedges = page_edges(spark, lineage, re_res,
+                        page_key_map(gio.read_table(spark, out("extract"))),
+                        n_buckets)
+    # the mention explode creates PARTIAL groups for stable entities
+    # co-mentioned on affected rows — only groups whose entity
+    # identity is in the remap image actually changed, and those are
+    # complete (every row carrying such a key is affected by
+    # construction)
+    pedges = _mark(pedges, new_keys, "obj_key", "_mk") \
+        .filter(F.col("_mk").isNotNull()).drop("_mk")
+    new_edges = build_edges(re_res, n_buckets=n_buckets).unionByName(pedges)
 
     edges_old = gio.read_table(spark, out("edges"))
     aff_old_edges = (
@@ -328,16 +284,12 @@ def apply_promotions(
 
     # nodes commit BEFORE edges commit (assembler order, bulk.go) —
     # the delta volumes are small, so sequential commits are fine
-    gio.merge_upsert(spark, new_nodes, out("nodes"),
-                     keys=["canonical_key"], partition_by=["kind"],
-                     assume_unique=True, delete_keys=stale_nodes,
-                     require_existing=True)
     fanout = gio.merge_fanout(spark)
-    gio.merge_upsert(spark, new_edges, out("edges"),
-                     keys=["subj_key", "pred", "obj_key"],
-                     partition_by=["pred", "bucket"],
-                     assume_unique=True, fanout=fanout,
-                     delete_keys=aff_old_edges,
+    gio.merge_upsert(spark, new_nodes, out("nodes"), **NODE_SINK,
+                     fanout=fanout, delete_keys=stale_nodes,
+                     require_existing=True)
+    gio.merge_upsert(spark, new_edges, out("edges"), **EDGE_SINK,
+                     fanout=fanout, delete_keys=aff_old_edges,
                      require_existing=True)
 
     # keep the evidence table consistent for the NEXT delta round:
@@ -358,8 +310,7 @@ def apply_promotions(
     gio.write_table(identifier_candidates(links_new, freq=freq),
                     out("identifier_candidates"))
 
-    _record_lineage(spark, lineage, out, fp_base, dict_fp, asrt_fp,
-                    include_page_graph)
+    _record_lineage(spark, lineage, out, fps)
     # patch fully committed + lineage stamped → retire the journal
     import shutil
     shutil.rmtree(journal, ignore_errors=True)
@@ -367,29 +318,14 @@ def apply_promotions(
     return stats
 
 
-def _record_lineage(spark, lineage, out, fp_base, dict_fp, asrt_fp,
-                    include_page_graph) -> None:
+def _record_lineage(spark, lineage, out, fps) -> None:
     """Stamp every dict-dependent stage with the enriched dictionary's
-    fingerprint — the exact fingerprints KGPipeline._run would use, so
-    a later run with the same corpus + enriched dict resumes all of
-    them (lineage is recorded only after all tables are durably
-    swapped, preserving the crash story: a failure mid-patch re-runs
-    the delta, whose merges are idempotent)."""
-    for stage, fp in [
-        ("link", _fingerprint(fp_base, "link", dict_fp)),
-        ("equivalence_edges",
-         _fingerprint(fp_base, "equivalence_edges", dict_fp)),
-        ("identifier_candidates",
-         _fingerprint(fp_base, "identifier_candidates", dict_fp)),
-        ("canonicalize",
-         _fingerprint(fp_base, "canonicalize", dict_fp, asrt_fp)),
-        ("materialize",
-         _fingerprint(fp_base, "materialize", dict_fp, asrt_fp)),
-        ("graph_merge",
-         _fingerprint(fp_base, "graph_merge", dict_fp, asrt_fp,
-                      include_page_graph)),
-    ]:
-        table = "edges" if stage == "graph_merge" else stage
-        path = out(table)
-        lineage.record(stage, fp, gio.read_table(spark, path),
+    fingerprint — the exact fingerprints KGPipeline._run uses, so a
+    later run with the same corpus + enriched dict resumes all of them
+    (lineage is recorded only after all tables are durably swapped,
+    preserving the crash story: a failure mid-patch re-runs the delta,
+    whose merges are idempotent)."""
+    for stage in _DICT_STAGES:
+        path = out("edges" if stage == "graph_merge" else stage)
+        lineage.record(stage, fps[stage], gio.read_table(spark, path),
                        table_path=path)

@@ -47,9 +47,12 @@ def table_exists(path: str) -> bool:
 
 def merge_fanout(spark: SparkSession, cap: int = 8) -> int:
     """Sink fanout (parallel encode tasks per jumbo partition dir) for
-    merge_upsert callers — one place so the pipeline's ingest merge and
-    the enrichment patch merge can never silently diverge on write
-    parallelism for the SAME table (round-4 review)."""
+    every merge into the graph tables: the pipeline's ingest merge and
+    the enrichment patch pass it alongside materialize.NODE_SINK /
+    EDGE_SINK, so the two paths never diverge on write parallelism for
+    the SAME table. Both tables partition on a low-cardinality column
+    (kind, pred), so without it a write serializes into one task per
+    partition value."""
     return max(1, min(cap, spark.sparkContext.defaultParallelism))
 
 

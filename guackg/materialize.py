@@ -11,12 +11,15 @@ Identity: entity_id = xxhash64(canonical_key) — deterministic, no
 global sequence (the scale-out replacement for guac's atomic uint32,
 backend.go:73-75); safe to recompute on any executor, any run.
 
-Tables (Iceberg at scale; parquet here):
-- nodes(entity_id, kind, canonical_key)                 partition: kind
-- edges(src_id, pred, dst_id, n_evidence,
-        first_seen, last_seen)                          partition: pred
-- triples_resolved(url, warc_ts, subj_key, pred,
-        obj_key, subj_surface, obj_surface, extractor)  evidence table
+Tables (Iceberg at scale; parquet here; layouts in NODE_SINK /
+EDGE_SINK):
+- nodes(entity_id, kind, canonical_key)       partition: kind
+- edges(src_id, pred, dst_id, n_evidence, first_seen, last_seen,
+        match_level, subj_key, obj_key, bucket)
+                                              partition: (pred, bucket)
+- triples_resolved(url, warc_ts, subj_key, pred, obj_key,
+        subj_surface, obj_surface, extractor, match_level)
+                                              evidence table
 
 Skew note: the edge aggregation groups by (subj_key, pred, obj_key)
 — head entities produce hot keys, but partial aggregation (map-side
@@ -32,6 +35,30 @@ from pyspark.sql import functions as F
 
 from guackg.cc import canonicalize_keys
 from guackg.link import normalize_surface_col
+
+
+# The graph tables' merge_upsert layout, shared by every writer (the
+# pipeline's ingest merge, the enrichment patch) and the compaction
+# scripts. assume_unique: build_nodes dedups on canonical_key and the
+# page: namespace is disjoint from every entity namespace; both edge
+# branches are groupBys on the edge key and pred='mentions' is
+# disjoint from the predicate vocab. Edges partition on two levels
+# (pred, bucket=pmod(xxhash64(subj_key), B)): pred has cardinality
+# O(10) and 'mentions' holds ~80% of all edges, so pruning on pred
+# alone rewrites most of the table per increment — the key-derived
+# bucket prunes rewrites to the buckets the delta actually touches.
+NODE_SINK = {"keys": ["canonical_key"], "partition_by": ["kind"],
+             "assume_unique": True}
+EDGE_SINK = {"keys": ["subj_key", "pred", "obj_key"],
+             "partition_by": ["pred", "bucket"], "assume_unique": True}
+
+
+def page_key_map(extract: DataFrame) -> DataFrame:
+    """(url, warc_ts, page_key) from the extract table: a page's node
+    key is 'page:' || page_sha256 (the T10 HasSBOM-digest identity)."""
+    return extract.select(
+        "url", "warc_ts",
+        F.concat(F.lit("page:"), F.col("page_sha256")).alias("page_key"))
 
 
 def kind_of_key(col: F.Column) -> F.Column:
@@ -194,10 +221,9 @@ def build_edges(resolved: DataFrame,
 def page_map_fits_broadcast(n_rows: int) -> bool:
     """Whether an extract-stage page map of `n_rows` rows fits the
     64 MiB broadcast budget at ~150 B/row (url + ts + 'page:'+sha key).
-    Shared by the pipeline's edge build and the enrichment patch so the
-    same table can never get a different broadcast decision on the two
-    paths (round-4 review). Callers feed it the EXACT row count from
-    lineage, not Catalyst's estimate."""
+    Its one caller is pipeline.page_edges, which the ingest merge and
+    the enrichment patch both build page edges through, feeding it the
+    EXACT row count from lineage, not Catalyst's estimate."""
     return bool(n_rows) and n_rows * 150 <= 64 * 1024 * 1024
 
 
@@ -218,11 +244,11 @@ def page_mention_edges(resolved: DataFrame,
     rows (2× the triple count), and the entity node set is untouched
     (page nodes are appended separately by `page_node_rows`).
 
-    page_keys: (url, warc_ts, page_key) from the extract table via
-    'page:' || page_sha256 — it carries the url-level crawl timestamp
-    so NO second scan of the resolved table is needed for ts bounds
-    (a url's triples all inherit its single warc_ts; duplicate
-    url rows, if any, fold in the final min/max).
+    page_keys: (url, warc_ts, page_key) from `page_key_map` — it
+    carries the url-level crawl timestamp so NO second scan of the
+    resolved table is needed for ts bounds (a url's triples all
+    inherit its single warc_ts; duplicate url rows, if any, fold in
+    the final min/max).
 
     ONE heavy exchange total. The exploded mention stream joins the
     (url → page_key, ts) map FIRST, then aggregates straight to
@@ -241,10 +267,10 @@ def page_mention_edges(resolved: DataFrame,
     a project+explode over dictionary-compressed parquet estimates at
     ~2 bytes/row, so with any raised auto-broadcast threshold the
     planner broadcasts the 10×-larger MENTION stream through the
-    driver. The pipeline passes True only when the extract lineage's
-    exact row count bounds the map under the broadcast budget
-    (pipeline.py); False PINS a shuffle join with a merge hint —
-    correct at 10^12 docs where the map measures in TBs, and free in
+    driver. pipeline.page_edges passes True only when the extract
+    lineage's exact row count bounds the map under the broadcast
+    budget; False PINS a shuffle join with a merge hint — correct at
+    10^12 docs where the map measures in TBs, and free in
     between (with the real map >10 MB, AQE would never have converted
     to broadcast anyway). The hint exists because leaving the planner
     free is actively unsafe here: the ~2 B/row estimate puts the

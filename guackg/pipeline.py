@@ -27,7 +27,8 @@ from guackg.link import (DRIVER_LINK_MAX_DICT, DRIVER_LINK_MAX_VOCAB,
                          advisory_edges, equivalence_edges_from_links,
                          identifier_candidates, link_mentions,
                          link_mentions_driver, mention_frequencies)
-from guackg.materialize import (build_edges, build_nodes,
+from guackg.materialize import (EDGE_SINK, NODE_SINK, build_edges,
+                                build_nodes, page_key_map,
                                 page_map_fits_broadcast,
                                 page_mention_edges, page_node_rows,
                                 resolve_triples)
@@ -46,13 +47,88 @@ def _content_fp(df: DataFrame, cols: list[str]) -> str:
     """Order-insensitive content fingerprint of a small side input
     (row count + xxhash64 sum over the identity columns; decimal sum
     dodges ANSI long overflow). The Iceberg analog is the side
-    table's snapshot id — callers that have one pass it instead via
-    `dict_version` and skip this one tiny job."""
+    table's snapshot id."""
     row = df.select(
         F.count("*").alias("n"),
         F.coalesce(F.sum(F.xxhash64(*cols).cast("decimal(38,0)")),
                    F.lit(0).cast("decimal(38,0)")).alias("h")).collect()[0]
     return f"{row['n']}:{row['h']}"
+
+
+def side_input_fps(alias_dict: DataFrame,
+                   assertions: DataFrame | None) -> tuple[str, str]:
+    """(dictionary, assertions) content fingerprints. The link stage
+    and everything downstream of it is a function of the alias
+    DICTIONARY and the equivalence ASSERTIONS too, not just the corpus
+    — the §3.3 enrichment cycle re-runs the same corpus with a grown
+    dictionary, and a fingerprint that ignored it would skip `link`
+    and serve stale links."""
+    dict_fp = _content_fp(alias_dict, ["surface", "canonical_key"])
+    asrt_fp = "none" if assertions is None else \
+        _content_fp(assertions, ["key_a", "key_b"])
+    return dict_fp, asrt_fp
+
+
+# the dictionary-dependent lineage records — exactly the ones an
+# enrichment pass (enrich.apply_promotions) rewrites and re-stamps
+_DICT_STAGES = ("link", "equivalence_edges", "identifier_candidates",
+                "canonicalize", "materialize", "graph_merge")
+
+
+def stage_fingerprints(input_fingerprint: str, dict_fp: str,
+                       asrt_fp: str) -> dict[str, str]:
+    """Every lineage record's fingerprint: each stage's output is a
+    pure function of the inputs named here, so the pipeline's resume
+    check and the enrichment patch's lineage stamp share one
+    declaration. The corpus-only stages exclude the side inputs so they
+    still resume across enrichment. The strings are persisted in every
+    workdir's `_lineage/`: any change here invalidates them all."""
+    base = _fingerprint(PIPELINE_VERSION, EXTRACTOR_VERSION,
+                        input_fingerprint)
+    dct, both = (dict_fp,), (dict_fp, asrt_fp)
+    parts = {"extract": (), "triples": (), "tombstones": (),
+             "mention_freq": (), "link": dct, "equivalence_edges": dct,
+             "identifier_candidates": dct, "canonicalize": both,
+             "materialize": both,
+             # the trailing True is a retired page-graph flag, kept so
+             # existing graph_merge records still match
+             "graph_merge": both + (True,)}
+    return {name: _fingerprint(base, name, *p) for name, p in parts.items()}
+
+
+def canonicalize_edges(equiv: DataFrame, parsed: DataFrame,
+                       links: DataFrame,
+                       assertions: DataFrame | None) -> DataFrame:
+    """The canonicalizer's FULL edge set: linker equivalence edges,
+    PARSER-ASSERTED equality (the advisory dialect's `same_as` rows of
+    the parsed triples table, resolved through `links`) and
+    caller-supplied assertions. The pipeline and the enrichment patch
+    both build components over this set — dropping a source would
+    silently split every component it merged."""
+    edges = equiv.select("key_a", "key_b").unionByName(
+        advisory_edges(parsed.filter(F.col("pred") == SAME_AS_PRED), links)
+        .select("key_a", "key_b"))
+    if assertions is not None:
+        edges = edges.unionByName(assertions.select("key_a", "key_b"))
+    return edges
+
+
+def page_edges(spark: SparkSession, lineage: Lineage, resolved: DataFrame,
+               page_keys: DataFrame, n_buckets: int) -> DataFrame:
+    """Page→entity `mentions` edges for the edges sink, built the same
+    way on the ingest and the enrichment paths. The url→page map is
+    broadcast only when the EXACT row count from the extract stage's
+    lineage bounds it under the broadcast budget — real stats, not
+    Catalyst's estimate (see page_mention_edges' contract). The
+    mentions branch's single exchange is widened when the cluster has
+    more cores than the table has buckets (key-deterministic salt)."""
+    ext_rec = lineage.read("extract")
+    cores = spark.sparkContext.defaultParallelism
+    return page_mention_edges(
+        resolved, page_keys,
+        broadcast_page_map=page_map_fits_broadcast(
+            ext_rec["total_rows"] if ext_rec else 0),
+        n_buckets=n_buckets, agg_salt=max(1, -(-cores // n_buckets)))
 
 
 class KGPipeline:
@@ -75,14 +151,14 @@ class KGPipeline:
     def _out(self, name: str) -> str:
         return os.path.join(self.workdir, name)
 
-    def _run_stage(self, name: str, fingerprint: str, compute,
-                   partition_by: list[str] | None = None) -> DataFrame:
+    def _run_stage(self, name: str, fingerprint: str,
+                   compute) -> DataFrame:
         path = self._out(name)
         if self.lineage.completed(name, fingerprint) and gio.table_exists(path):
             return gio.read_table(self.spark, path)
         t0 = time.time()
         df = compute()
-        gio.write_table(df, path, partition_by)
+        gio.write_table(df, path)
         out = gio.read_table(self.spark, path)
         self.lineage.record(name, fingerprint, out, table_path=path)
         self.stage_secs[name] = round(time.time() - t0, 2)
@@ -95,8 +171,6 @@ class KGPipeline:
         assertions: DataFrame | None = None,
         stages: tuple[str, ...] = STAGES,
         input_fingerprint: str = "",
-        include_page_graph: bool = True,
-        dict_version: str | None = None,
     ) -> dict[str, DataFrame]:
         """Stages whose outputs nothing downstream consumes (tombstones,
         identifier_candidates, the nodes merge) run on CONCURRENT Spark
@@ -112,8 +186,7 @@ class KGPipeline:
         self._async = self._side_stages_async()
         try:
             return self._run(pages, alias_dict, assertions, stages,
-                             input_fingerprint, include_page_graph,
-                             dict_version)
+                             input_fingerprint)
         finally:
             for t in self._threads:
                 t.join()
@@ -161,22 +234,9 @@ class KGPipeline:
         assertions: DataFrame | None,
         stages: tuple[str, ...],
         input_fingerprint: str,
-        include_page_graph: bool,
-        dict_version: str | None = None,
     ) -> dict[str, DataFrame]:
-        fp_base = _fingerprint(PIPELINE_VERSION, EXTRACTOR_VERSION,
-                               input_fingerprint)
-        # Side-input identity: the link stage (and everything
-        # downstream of it) is a function of the alias DICTIONARY and
-        # the equivalence ASSERTIONS too, not just the corpus — the
-        # §3.3 enrichment cycle re-runs the same corpus with a grown
-        # dictionary, and a fingerprint that ignored it would skip
-        # `link` and serve stale links. fp_base deliberately excludes
-        # them so extract/triples still resume across enrichment.
-        dict_fp = dict_version if dict_version is not None else \
-            _content_fp(alias_dict, ["surface", "canonical_key"])
-        asrt_fp = "none" if assertions is None else \
-            _content_fp(assertions, ["key_a", "key_b"])
+        fps = stage_fingerprints(input_fingerprint,
+                                 *side_input_fps(alias_dict, assertions))
         out: dict[str, DataFrame] = {}
 
         if "extract" in stages:
@@ -192,16 +252,10 @@ class KGPipeline:
                     "url", "warc_ts", "lang", "extracted_text",
                     valid_col().alias("valid"),
                     F.sha2(F.col("html"), 256).alias("page_sha256"))
-            full = self._run_stage(
-                "extract", _fingerprint(fp_base, "extract"), _extract)
+            full = self._run_stage("extract", fps["extract"], _extract)
             out["extracted"] = full.filter(F.col("valid")).select(
                 "url", "warc_ts", "lang", "extracted_text")
             out["quarantine"] = full.filter(~F.col("valid"))
-            # (url → page document identity), reused by the page graph
-            # below — a 2-column read of the extract table, NOT a
-            # second scan of the raw blobs
-            out["page_identity"] = full.select("url", "warc_ts",
-                                               "page_sha256")
         else:
             return out
 
@@ -212,10 +266,9 @@ class KGPipeline:
             # assembler.go:99-103) are filters over the written table
             # — assertions feed the canonicalizer, never edges.
             parsed = self._run_stage(
-                "triples", _fingerprint(fp_base, "triples"),
+                "triples", fps["triples"],
                 lambda: extract_triples(out["extracted"]))
             out["triples"] = parsed.filter(F.col("pred") != SAME_AS_PRED)
-            out["advisory"] = parsed.filter(F.col("pred") == SAME_AS_PRED)
             # T4 tombstones: pages that were scanned (valid, en) but
             # yielded ZERO triples — guac's noVuln "scanned and clean"
             # rows (parser/vuln/vuln.go:65-168), so 'clean' is
@@ -241,8 +294,7 @@ class KGPipeline:
             # no downstream stage consumes tombstones → side thread
             self._spawn(lambda: out.__setitem__(
                 "tombstones",
-                self._run_stage("tombstones",
-                                _fingerprint(fp_base, "tombstones"),
+                self._run_stage("tombstones", fps["tombstones"],
                                 _tombstones)))
         else:
             return out
@@ -254,7 +306,7 @@ class KGPipeline:
             # consumer re-scanned and re-aggregated the exploded
             # surface stream (2× the triple count) independently.
             out["mention_freq"] = self._run_stage(
-                "mention_freq", _fingerprint(fp_base, "mention_freq"),
+                "mention_freq", fps["mention_freq"],
                 lambda: mention_frequencies(out["triples"]))
 
             def _link():
@@ -274,17 +326,15 @@ class KGPipeline:
                 linker = link_mentions_driver if small else link_mentions
                 links, _ = linker(mentions, alias_dict)
                 return links
-            out["links"] = self._run_stage(
-                "link", _fingerprint(fp_base, "link", dict_fp), _link)
+            out["links"] = self._run_stage("link", fps["link"], _link)
             # derived from the MATERIALIZED links — a projection, not a
             # second run of the broadcast/LSH linking DAG. Runs under
-            # its own lineage fingerprint (same fp_base) so a new
-            # input fingerprint recomputes it alongside the link stage
-            # — mere table existence is NOT enough (a stale edges
-            # table from a prior ingest must not feed canonicalize).
+            # its own lineage fingerprint so a new input fingerprint
+            # recomputes it alongside the link stage — mere table
+            # existence is NOT enough (a stale edges table from a
+            # prior ingest must not feed canonicalize).
             out["equivalence_edges"] = self._run_stage(
-                "equivalence_edges",
-                _fingerprint(fp_base, "equivalence_edges", dict_fp),
+                "equivalence_edges", fps["equivalence_edges"],
                 lambda: equivalence_edges_from_links(out["links"]))
             # S9/T12 identifier side-channel: unresolved surfaces +
             # mention counts, posted for later dictionary enrichment
@@ -293,30 +343,18 @@ class KGPipeline:
             self._spawn(lambda: out.__setitem__(
                 "identifier_candidates",
                 self._run_stage(
-                    "identifier_candidates",
-                    _fingerprint(fp_base, "identifier_candidates", dict_fp),
+                    "identifier_candidates", fps["identifier_candidates"],
                     lambda: identifier_candidates(
                         out["links"], freq=out["mention_freq"]))))
         else:
             return out
 
         if "canonicalize" in stages:
-            def _cc():
-                equiv = out["equivalence_edges"].select("key_a", "key_b")
-                # parser-asserted equality (the advisory dialect)
-                # merges components exactly like linker edges and
-                # caller-supplied assertions do
-                equiv = equiv.unionByName(
-                    advisory_edges(out["advisory"], out["links"])
-                    .select("key_a", "key_b"))
-                if assertions is not None:
-                    equiv = equiv.unionByName(
-                        assertions.select(F.col("key_a"), F.col("key_b")))
-                return connected_components(equiv)
             out["components"] = self._run_stage(
-                "canonicalize",
-                _fingerprint(fp_base, "canonicalize", dict_fp, asrt_fp),
-                _cc)
+                "canonicalize", fps["canonicalize"],
+                lambda: connected_components(canonicalize_edges(
+                    out["equivalence_edges"], parsed, out["links"],
+                    assertions)))
         else:
             return out
 
@@ -325,31 +363,24 @@ class KGPipeline:
                 return resolve_triples(out["triples"], out["links"],
                                        out["components"])
             out["triples_resolved"] = self._run_stage(
-                "materialize",
-                _fingerprint(fp_base, "materialize", dict_fp, asrt_fp),
-                _resolve)
+                "materialize", fps["materialize"], _resolve)
             # T9/T10: page document nodes (sha256 identity) and
             # page→entity `mentions` edges land in the SAME nodes/
             # edges tables, but via their own pre-aggregated rows —
             # partitioned under pred=mentions / kind=page, so the
             # merge's partition pruning keeps predicate queries and
-            # the entity-node dedup unaffected by the page graph.
-            page_keys = None
-            if include_page_graph:
-                page_keys = out["page_identity"].select(
-                    "url", "warc_ts",
-                    F.concat(F.lit("page:"), F.col("page_sha256"))
-                    .alias("page_key"))
+            # the entity-node dedup unaffected by the page graph. The
+            # page map is a 3-column read of the extract table, NOT a
+            # second scan of the raw blobs.
+            page_keys = page_key_map(full)
             # Redelivery dedup for the graph sink: if THIS exact batch
-            # (same fp_base, same page-graph flag) already merged, skip
-            # both merges — the reference drops already-processed docs
-            # at the ingestor the same way (ingestor.go:109-121), so a
-            # crashed-after-commit replay costs a lineage read, not a
-            # full re-merge. A new input_fingerprint (real increment)
-            # changes fp_base and takes the O(delta) merge path.
-            merge_fp = _fingerprint(fp_base, "graph_merge", dict_fp, asrt_fp,
-                                    include_page_graph)
-            if (self.lineage.completed("graph_merge", merge_fp)
+            # already merged, skip both merges — the reference drops
+            # already-processed docs at the ingestor the same way
+            # (ingestor.go:109-121), so a crashed-after-commit replay
+            # costs a lineage read, not a full re-merge. A new
+            # input_fingerprint (real increment) changes the
+            # fingerprint and takes the O(delta) merge path.
+            if (self.lineage.completed("graph_merge", fps["graph_merge"])
                     and gio.table_exists(self._out("nodes"))
                     and gio.table_exists(self._out("edges"))):
                 out["nodes"] = gio.read_table(self.spark,
@@ -369,27 +400,16 @@ class KGPipeline:
             # (the nodes-before-edges visibility invariant holds on the
             # failure path too — never only on success)
             nodes_failed = threading.Event()
+            fanout = gio.merge_fanout(self.spark)
 
             def _nodes_merge():
                 t0 = time.time()
                 try:
                     nodes = build_nodes(out["triples_resolved"],
-                                        out["components"])
-                    if page_keys is not None:
-                        nodes = nodes.unionByName(page_node_rows(page_keys))
-                    # assume_unique: build_nodes dedups on canonical_key
-                    # and the page: namespace is disjoint from every
-                    # entity namespace. fanout: kind has cardinality
-                    # O(10) and the sink now spreads single-level
-                    # partitioning too, so without a salt the write
-                    # would serialize into one task per kind
+                                        out["components"]) \
+                        .unionByName(page_node_rows(page_keys))
                     gio.merge_upsert(self.spark, nodes, self._out("nodes"),
-                                     keys=["canonical_key"],
-                                     partition_by=["kind"],
-                                     assume_unique=True,
-                                     fanout=max(1, min(
-                                         8, self.spark.sparkContext
-                                         .defaultParallelism)))
+                                     **NODE_SINK, fanout=fanout)
                     self.stage_secs["nodes_merge"] = round(time.time() - t0, 2)
                 except BaseException:
                     nodes_failed.set()   # ordering: abort before gate
@@ -415,62 +435,20 @@ class KGPipeline:
             # distinct aggregations AND the partitioned write all ride
             # ONE exchange per branch (see build_edges docstring)
             edges = build_edges(out["triples_resolved"],
-                                n_buckets=n_buckets)
-            if page_keys is not None:
-                # broadcast the url→page map only when the EXACT row
-                # count from the extract stage's lineage bounds it
-                # under the broadcast budget (~150 B/row of url + ts +
-                # 'page:'+sha key). Real stats, not Catalyst's
-                # estimate — see page_mention_edges' contract.
-                ext_rec = self.lineage.read("extract")
-                bcast_map = page_map_fits_broadcast(
-                    ext_rec["total_rows"] if ext_rec else 0)
-                # widen the mentions branch's single exchange when the
-                # cluster has more cores than the table has buckets
-                # (key-deterministic salt — see page_mention_edges)
-                cores = self.spark.sparkContext.defaultParallelism
-                salt = max(1, -(-cores // n_buckets))
-                edges = edges.unionByName(
-                    page_mention_edges(out["triples_resolved"], page_keys,
-                                       broadcast_page_map=bcast_map,
-                                       n_buckets=n_buckets,
-                                       agg_salt=salt))
-            probe = os.environ.get("GUACKG_STAGE_PROBE") == "1"
-            if probe:
-                # diagnostic split (probe-only): force the edge BUILD
-                # (aggs + joins) separately from the merge/write so
-                # stage_secs shows where edges_merge's seconds live
-                edges = edges.persist()
-                edges.count()
-                self.stage_secs["edges_build"] = round(time.time() - t0, 2)
-                t0 = time.time()
-            # assume_unique: both branches are groupBys on the edge key
-            # and pred='mentions' is disjoint from the predicate vocab.
-            # Two-level partitioning (pred, bucket(subj_key)): pred has
-            # cardinality O(10) and 'mentions' holds ~80% of all edges,
-            # so pruning on pred alone rewrites most of the table per
-            # increment — the subj_key hash bucket (key-derived, so a
-            # key never moves partitions) prunes rewrites to the
-            # buckets the delta actually touches (round-2 finding #3).
+                                n_buckets=n_buckets).unionByName(
+                page_edges(self.spark, self.lineage,
+                           out["triples_resolved"], page_keys, n_buckets))
             # pre_distributed: the write-aligned build above already
             # hash-distributed each branch on its partition tuple, so
             # the first write encodes straight out of the aggregation
             # (no sink spread). Incremental merges still respread the
             # old∪new union; fanout salts their jumbo-dir encodes.
-            fanout = gio.merge_fanout(self.spark)
             gio.merge_upsert(self.spark, edges, self._out("edges"),
-                             keys=["subj_key", "pred", "obj_key"],
-                             partition_by=["pred", "bucket"],
-                             assume_unique=True, fanout=fanout,
+                             **EDGE_SINK, fanout=fanout,
                              pre_distributed=True,
                              commit_gate=nodes_gate,
                              commit_abort=nodes_failed)
             self.stage_secs["edges_merge"] = round(time.time() - t0, 2)
-            if probe:
-                # release the diagnostic cache: repeated runs in one
-                # session (the bench loop) would otherwise accumulate
-                # a full pre-merge edge build per run
-                edges.unpersist()
             # join the nodes thread BEFORE recording graph_merge: the
             # lineage row asserts both merges committed, and the error
             # append in the worker races the gate otherwise
@@ -481,6 +459,6 @@ class KGPipeline:
                        else RuntimeError("nodes merge failed"))
             out["nodes"] = gio.read_table(self.spark, self._out("nodes"))
             out["edges"] = gio.read_table(self.spark, self._out("edges"))
-            self.lineage.record("graph_merge", merge_fp, out["edges"],
-                                table_path=self._out("edges"))
+            self.lineage.record("graph_merge", fps["graph_merge"],
+                                out["edges"], table_path=self._out("edges"))
         return out

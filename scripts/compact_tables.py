@@ -17,9 +17,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from guackg import io as gio
+from guackg.materialize import EDGE_SINK, NODE_SINK
 from guackg.session import get_spark
 
-TABLES = {"nodes": ["kind"], "edges": ["pred", "bucket"]}
+TABLES = {"nodes": NODE_SINK["partition_by"],
+          "edges": EDGE_SINK["partition_by"]}
 
 
 def main() -> None:

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from guackg import graph as G
 from guackg import io as gio
+from guackg.materialize import page_key_map
 from guackg.session import get_spark
 
 QUERIES = ("neighbors", "reachable", "blast", "roots", "path",
@@ -64,10 +65,8 @@ def _tombstoned_page_keys(spark, workdir):
     # join per SNAPSHOT (url, warc_ts): tombstones are snapshot-keyed,
     # and a url can have both a clean snapshot and a triple-bearing one
     return (tomb.select("url", "warc_ts")
-            .join(extract.select("url", "warc_ts", "page_sha256"),
-                  on=["url", "warc_ts"])
-            .select(F.concat(F.lit("page:"), F.col("page_sha256"))
-                    .alias("key"))
+            .join(page_key_map(extract), on=["url", "warc_ts"])
+            .select(F.col("page_key").alias("key"))
             .distinct())
 
 

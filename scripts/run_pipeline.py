@@ -79,14 +79,11 @@ def main() -> None:
             summary[f"{name}_rows"] = out[name].count()
     if args.compact and "edges" in out:
         from guackg.io import compact_table
+        from guackg.materialize import EDGE_SINK, NODE_SINK
         summary["compact"] = {
-            "nodes": compact_table(spark, os.path.join(args.workdir,
-                                                       "nodes"),
-                                   partition_by=["kind"]),
-            "edges": compact_table(spark, os.path.join(args.workdir,
-                                                       "edges"),
-                                   partition_by=["pred", "bucket"]),
-        }
+            name: compact_table(spark, os.path.join(args.workdir, name),
+                                partition_by=sink["partition_by"])
+            for name, sink in (("nodes", NODE_SINK), ("edges", EDGE_SINK))}
     if "triples" in out:
         summary["triples_per_sec"] = round(
             summary["triples_rows"] / summary["elapsed_sec"], 1)

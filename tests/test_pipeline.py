@@ -8,7 +8,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from guackg.pipeline import STAGES, KGPipeline
+from guackg.pipeline import (PIPELINE_VERSION, STAGES, KGPipeline,
+                             side_input_fps, stage_fingerprints)
+from guackg.triples import EXTRACTOR_VERSION
 
 
 @pytest.fixture(scope="module")
@@ -155,12 +157,22 @@ def test_kill_and_resume(spark, corpus, pages_df, alias_df, assertions_df,
     # completed stage output was reused, not recomputed
     assert os.path.getmtime(os.path.join(wd, "triples", "_SUCCESS")) == \
         mtime_before
-    # lineage records exist for every stage with partition detail
-    for stage in STAGES:
+    # lineage records exist for every stage and side stage with
+    # partition detail, each under its declared fingerprint
+    dict_fp, asrt_fp = side_input_fps(alias_df, assertions_df)
+    fps = stage_fingerprints("test-corpus", dict_fp, asrt_fp)
+    assert set(STAGES) < set(fps) and len(fps) == 10
+    for stage, fp in fps.items():
         with open(os.path.join(wd, "_lineage", f"{stage}.json")) as f:
             rec = json.load(f)
         assert rec["status"] == "complete"
+        assert rec["fingerprint"] == fp, stage
         assert rec["total_rows"] == sum(p["rows"] for p in rec["partitions"])
+    # persisted in every deployed workdir: a changed form would make
+    # every existing graph_merge record stale
+    assert fps["graph_merge"] == (
+        f"{PIPELINE_VERSION}|{EXTRACTOR_VERSION}|test-corpus|graph_merge"
+        f"|{dict_fp}|{asrt_fp}|True")
 
     # compare against the uninterrupted run's table, re-read from disk
     # (the cached DataFrame from the fixture may reference overwritten
